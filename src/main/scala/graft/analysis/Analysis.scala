@@ -179,9 +179,6 @@ object Analysis {
   /** text → array<string> raw tokens (UAX#29). */
   def tokenize(text: Column): Column = tokenizeUdf(text)
 
-  /** Lowercase each token — built-in higher-order function (codegen). */
-  def lowercaseAll(tokens: Column): Column = transform(tokens, t => lower(t))
-
   /** Remove stop words — built-in `filter` + array_contains (codegen). */
   def stopFilter(tokens: Column, stop: Seq[String]): Column =
     if (stop.isEmpty) tokens

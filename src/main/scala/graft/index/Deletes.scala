@@ -57,8 +57,9 @@ object Deletes {
     * so %-scale deletes of a web corpus stream through a shuffle
     * instead of OOMing a broadcast), then regrouped and re-blocked with
     * the primary build's block layout; docs rows dropped the same way;
-    * stats recomputed; manifest generation bumped; tombstones cleared.
-    * A merge-policy compaction in one pass. */
+    * stats recomputed; manifest generation bumped; tombstones cleared;
+    * the old reader's warm tables released. A merge-policy compaction
+    * in one pass. */
   def compact(idx: InvertedIndex): InvertedIndex = {
     val spark = idx.spark
     import spark.implicits._
@@ -170,6 +171,9 @@ object Deletes {
     Files.move(tmp, Paths.get(dir, "manifest.json"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // the new reader plans the same paths as the old reader's warm
+    // tables; unpinned, they cannot shadow the compacted ones
+    idx.release()
     InvertedIndex.open(spark, dir)
   }
 

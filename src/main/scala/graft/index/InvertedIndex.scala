@@ -122,8 +122,8 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   @volatile private var statsMap: Option[Map[String, Long]] = None
   @volatile private var statsOverCap: Boolean = false
   def termDfMap(maxTerms: Int = 1 << 20): Option[Map[String, Long]] = {
-    // memoize the over-cap outcome too — without it every eligibility
-    // probe on a big index re-collects maxTerms+1 dictionary rows
+    // memoize the over-cap outcome too — without it every query on a
+    // big index re-collects maxTerms+1 dictionary rows
     if (statsMap.isEmpty && !statsOverCap) {
       val rows = termStats.select("term", "df").limit(maxTerms + 1).collect()
       if (rows.length <= maxTerms)
@@ -149,37 +149,10 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
   /** The url cache if warm() loaded it — never triggers a job. */
   def urlMapIfLoaded: Option[Map[Long, String]] = urlsMap
 
-  /** Driver-side norms cache for serving mode: docId → quantized doc
-    * length (dlq) — the in-RAM per-segment norms of a warm searcher
-    * [U lucene/core/.../codecs/lucene90/Lucene90NormsProducer.java:
-    * Lucene serves norms from memory-mapped .nvd, one byte per doc].
-    * Shipped to executors ONCE as a broadcast (`dlqBroadcast`) so
-    * scoring kernels can fold BM25 length normalization without a
-    * docs-table join. Same cap + on-demand shape as urlMap; a cluster
-    * deployment holds the same data as per-segment slices pinned on
-    * the executors. */
-  @volatile private var dlqsMap: Option[Map[Long, Int]] = None
-  def dlqMap(maxDocs: Long = 1L << 20): Option[Map[Long, Int]] = {
-    if (dlqsMap.isEmpty && stats.docCount <= maxDocs) {
-      val rows = docs.select("docId", "dlq").collect()
-      dlqsMap = Some(rows.map(r => r.getLong(0) -> r.getInt(1)).toMap)
-    }
-    dlqsMap
-  }
-
-  /** The norms cache as a REUSABLE broadcast — one ship per searcher
-    * lifetime, not one per query (re-broadcasting a 10^6-entry map per
-    * query would put the serialization back on the hot path). */
-  @volatile private var dlqBc: Option[org.apache.spark.broadcast.Broadcast[Map[Long, Int]]] = None
-  def dlqBroadcast(maxDocs: Long = 1L << 20): Option[org.apache.spark.broadcast.Broadcast[Map[Long, Int]]] = {
-    if (dlqBc.isEmpty)
-      dlqMap(maxDocs).foreach(m => dlqBc = Some(spark.sparkContext.broadcast(m)))
-    dlqBc
-  }
-
-  /** The stored-fields (url) cache as a reusable broadcast — same
-    * lifetime contract as `dlqBroadcast`; lets serving kernels recover
-    * the corpus doc_id inside the scoring pass without a docs join. */
+  /** The stored-fields (url) cache as a REUSABLE broadcast — one ship
+    * per searcher lifetime, not one per query; lets serving kernels
+    * recover the corpus doc_id inside the scoring pass without a docs
+    * join. */
   @volatile private var urlBc: Option[org.apache.spark.broadcast.Broadcast[Map[Long, String]]] = None
   def urlBroadcast(maxDocs: Long = 1L << 20): Option[org.apache.spark.broadcast.Broadcast[Map[Long, String]]] = {
     if (urlBc.isEmpty)
@@ -209,8 +182,9 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
     filterBitsets.computeIfAbsent(key, _ => build)
 
   /** Pin the segment tables in executor memory and materialize them —
-    * the analogue of a warm MMapDirectory + preloaded norms in the
-    * reference's "warm searcher" serving mode. Opt-in: at full corpus
+    * the analogue of a warm MMapDirectory in the reference's "warm
+    * searcher" serving mode (norms need no separate preload: every
+    * posting carries its doc's norm byte). Opt-in: at full corpus
     * scale you warm only the hot working set, so nothing in the query
     * path REQUIRES this. */
   def warm(): InvertedIndex = {
@@ -221,9 +195,19 @@ final class InvertedIndex(val spark: SparkSession, val dir: String) extends Inde
       p.count(); d.count(); t.count()
       cached = Some((p, d, t))
       urlMap() // serving mode: stored-fields lookup without a job
-      dlqMap() // serving mode: in-RAM norms for the scoring kernels
     }
     this
+  }
+
+  /** Unpin what `warm()` persisted. A reader opened later on this
+    * directory plans the same parquet paths, so Spark's cache manager
+    * would serve it these tables — stale once `Deletes.compact` has
+    * rewritten the directory in place. */
+  private[index] def release(): Unit = {
+    cached.foreach { case (p, d, t) =>
+      Seq(p, d, t).foreach(_.unpersist(blocking = true))
+    }
+    cached = None
   }
 }
 

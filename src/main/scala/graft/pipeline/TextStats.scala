@@ -15,14 +15,6 @@ object TextStats {
   def wsTokenCount(text: Column): Column =
     size(split(text, "\\s+"))
 
-  /** BPE-ish subword count: runs of letters, runs of digits, and single
-    * punctuation marks each count as one piece (a cheap proxy for
-    * tokenizer-cost estimation at corpus scale). */
-  def bpeishTokenCount(text: Column): Column =
-    size(filter(
-      split(text, "(?<=[^\\p{L}\\p{N}])|(?=[^\\p{L}\\p{N}])"),
-      t => t =!= "" && t =!= " "))
-
   /** Per-doc integer counting stats (exact, oracle-checkable):
     * (doc_id, n_tokens, n_chars, n_stop). */
   def countingStats(documents: DataFrame): DataFrame = {

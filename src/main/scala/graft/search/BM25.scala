@@ -46,5 +46,4 @@ object BM25 {
 final case class Bm25Stats(docCount: Long, sumTotalTermFreq: Long) {
   val avgdl: Float = BM25.avgFieldLength(sumTotalTermFreq, docCount)
   @transient lazy val cache: Array[Float] = BM25.buildCache(avgdl)
-  def idfOf(df: Long): Float = BM25.idf(docCount, df)
 }

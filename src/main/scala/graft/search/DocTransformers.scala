@@ -60,7 +60,8 @@ object DocTransformers {
     }
 
   /** Cap for shipping hit ids as an isin predicate into the docs scan
-    * (the same regime bound as EDisMax.BfPushdownCap / Ltr). */
+    * (an isin of millions of ids would bloat the plan; larger hit sets
+    * take the distributed join). */
   val HitPushdownCap = 10000
 
   /** Driver-known ids of the hits frame when it is already local data

@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analysis
@@ -15,7 +15,7 @@ import graft.index.IndexView
   *
   * Fields are separate single-field indexes built over the SAME corpus
   * in the SAME url order, so docIds line up across them and the
-  * cross-field combine is an equi-join on docId (per-field analysis
+  * cross-field combine is a grouping on docId (per-field analysis
   * chains, e.g. the url field's punct→space mapping filter, live in the
   * field's own build). Scoring: per (doc, term)
   * max_f(boost_f · score_f) (tie=0), summed over matching terms —
@@ -91,9 +91,12 @@ object EDisMax {
     }
   }
 
+
   /** Execute over `fields` = (index, boost) per qf entry.
     * Output: (rank, doc_id), double-precision tie-robust ranking like
-    * the other relational top-k paths.
+    * the other relational top-k paths. One plan for every input — warm
+    * or cold, any dictionary size, with or without deletes and `bf`
+    * (see `scoredDocs`).
     *
     * @param tie the dismax tiebreak [U solr DisMaxQParser `tie`]:
     *        per (doc, term) the field score is
@@ -118,380 +121,165 @@ object EDisMax {
     *        Additive combine order is pinned: s = Σts, then pf/pf2/pf3
     *        (each field in list order, grams left to right), then bq
     *        in list order, then bf. */
-  def topK(fields: Seq[(IndexView, Double)], p0: Parsed, k: Int = 10,
+  def topK(fields: Seq[(IndexView, Double)], p: Parsed, k: Int = 10,
            tie: Double = 0.0,
-           bf: Option[org.apache.spark.sql.Column] = None,
+           bf: Option[Column] = None,
            pf: Seq[(IndexView, Double)] = Nil,
            pf2: Seq[(IndexView, Double)] = Nil,
            pf3: Seq[(IndexView, Double)] = Nil,
-           bq: Seq[(String, Double)] = Nil,
-           bfCap: Int = BfPushdownCap): DataFrame = {
+           bq: Seq[(String, Double)] = Nil): DataFrame = {
+    val scored = scoredDocs(fields, p, tie, bf, pf, pf2, pf3, bq)
+    val primary = fields.head._1
+    val spark = primary.spark
+    import spark.implicits._
+    val winners = scored
+      .orderBy(desc("s"), asc("docId")).limit(k)
+      .as[(Long, Double)].collect()
+      .sortBy { case (d, s) => (-s, d) }
+    // stored fields for the ≤k winners: the Searcher's GET_FIELDS phase
+    // (the warm url cache, else one docId-pushdown fetch)
+    new Searcher(primary).rankedResult(winners.map { case (d, s) => (d, s.toFloat) })
+      .select(col("rank"),
+        element_at(split(col("url"), "/"), -1).cast("long").as("doc_id"))
+  }
+
+  /** The lazy (docId, s) frame `topK` ranks — every live doc passing the
+    * Boolean gate, fully scored. Exposed for PlanSpec.
+    *
+    * The whole query — per-field BM25 term partials, the cross-field
+    * DisMax (tie fold), must/mustNot/mm Boolean logic over any-field
+    * matches, pf/pf2/pf3 phrase tfs, bq additive boosts — folds per doc
+    * in ONE distributed pass over the query terms' postings: one
+    * position scan per field (a term's tf is its position count, and
+    * every posting carries its doc's length norm — the block norm byte,
+    * as Lucene's impacts keep (freq, norm) beside the postings), the
+    * field's tombstones anti-joined, the scans tagged by field ordinal
+    * and unioned, one groupByKey(docId) shuffle (the fields are docId-
+    * aligned — same corpus, same url order). ExtendedDismaxQParser
+    * likewise scores the same postings cursors once per segment. `bf`
+    * is the only docs-table read: one left join over the primary field.
+    *
+    * The double-precision op sequence: per field ws = (idf_f·(tf/(tf+
+    * 1.2·(0.25+0.75·dlq_f/avgdl_f))))·boost_f; per term ts = max_f(ws)
+    * + tie·(Σ_f(ws) − max_f(ws)); s = Σ ts must-then-should; then per
+    * gram in pinned order s += boost·(sumIdf·(ptf/(ptf+1.2·(0.25+0.75·
+    * dlq/avgdl)))) with the gram field's stats; then bq in list order
+    * s += boost·(idf·tfNorm) over the primary field; then s +=
+    * coalesce(bf, 0). Gates ir_q30/35/36/39/41/46 hash-validate it
+    * against the SQL oracles. */
+  private[search] def scoredDocs(fields: Seq[(IndexView, Double)], p0: Parsed,
+      tie: Double, bf: Option[Column], pf: Seq[(IndexView, Double)],
+      pf2: Seq[(IndexView, Double)], pf3: Seq[(IndexView, Double)],
+      bq: Seq[(String, Double)]): DataFrame = {
     require(fields.nonEmpty, "edismax needs at least one qf field")
     // re-establish parse()'s invariant (deduped lists, should disjoint
     // from must, mm within the optional count) on caller-BUILT Parsed
-    // values too: the single-pass kernel folds termTs once per list
-    // entry, so a term in both must and should would double-count there
-    // while the general plan scores each distinct (term, doc) once
+    // values too: the kernel folds termTs once per list entry, so a
+    // term in both must and should would otherwise double-count
     val p = {
       val must = p0.must.distinct
       val should = p0.should.distinct.filterNot(must.contains)
       Parsed(must, should, p0.mustNot.distinct,
         math.max(0, math.min(p0.mmCount, should.length)), p0.positional)
     }
+    require((p.must ++ p.should).nonEmpty, "edismax needs at least one positive term")
     val spark = fields.head._1.spark
-    val scoredTerms = p.must ++ p.should
-    require(scoredTerms.nonEmpty, "edismax needs at least one positive term")
-
-    // pf/pf2/pf3 shingles of the positional order, in the PINNED
-    // additive order (fields in list order, grams left→right, pf
-    // before pf2 before pf3) — shared by both execution plans below
-    final case class GramSpec(field: IndexView, boost: Double, gram: Seq[String])
-    val gramSeq: Seq[GramSpec] =
-      (if (p.positional.length >= 2)
-         pf.map { case (i, b) => GramSpec(i, b, p.positional) }
-       else Nil) ++
-      (if (p.positional.length >= 2)
-         pf2.flatMap { case (i, b) =>
-           p.positional.sliding(2).map(g => GramSpec(i, b, g)).toSeq }
-       else Nil) ++
-      (if (p.positional.length >= 3)
-         pf3.flatMap { case (i, b) =>
-           p.positional.sliding(3).map(g => GramSpec(i, b, g)).toSeq }
-       else Nil)
-
-    // ---- single-pass serving kernel ----
-    // No boost function and every index warm: the whole query — per-
-    // field BM25 term partials, the cross-field DisMax (tie fold),
-    // must/mustNot/mm Boolean logic over any-field matches, pf/pf2/pf3
-    // phrase tfs, bq additive boosts — folds per doc in ONE distributed
-    // pass over the query terms' postings: one position scan per field
-    // (a term's tf is its position count), tagged by field ordinal and
-    // unioned, one groupByKey(docId) shuffle (the fields are docId-
-    // aligned — same corpus, same url order), and NO docs-table joins —
-    // per-field length norms come from warm in-RAM norms broadcasts,
-    // the reference's serving shape (NormsProducer keeps one byte per
-    // doc in memory [U lucene/core/.../codecs/lucene90/
-    // Lucene90NormsProducer.java]; ExtendedDismaxQParser scores the
-    // same postings cursors once per segment). The general relational
-    // plan below chains 4+ exchanges per field (scoredTf stats+docs
-    // joins, cross-field groupBy, perDoc groupBy, phrase join) that AQE
-    // stages into ~8 jobs per query. Arithmetic is the same
-    // double-precision op sequence — gates ir_q30/36/39/41/46
-    // hash-validate it against the SQL oracles, and EDisMaxSpec asserts
-    // kernel ≡ general plan for single- and multi-field shapes. Falls
-    // through to the general plan when bf is present (arbitrary
-    // docs-table Column), any index has deletes, or any index's
-    // dictionary/norms exceed the cache caps (2^20 — a cluster serves
-    // norms as executor-pinned per-segment slices instead).
-    val kernelFields: Option[(Seq[(graft.index.InvertedIndex, Double)],
-                              Seq[(graft.index.InvertedIndex, Double, Seq[String])])] =
-      if (bf.isEmpty) {
-        val qfInv = fields.collect { case (i: graft.index.InvertedIndex, b) => (i, b) }
-        val gramInv = gramSeq.collect {
-          case GramSpec(i: graft.index.InvertedIndex, b, g) => (i, b, g) }
-        val allInv = qfInv.map(_._1) ++ gramInv.map(_._1)
-        if (qfInv.length == fields.length && gramInv.length == gramSeq.length &&
-            allInv.forall(i => !i.hasDeletes && i.termDfMap().isDefined &&
-              i.dlqBroadcast().isDefined) &&
-            qfInv.head._1.urlMap().isDefined)
-          Some((qfInv, gramInv))
-        else None
-      } else None
-    kernelFields.foreach { case (qfInv, gramInv) =>
-      return singlePassTopK(qfInv, p, k, tie, gramInv, bq)
-    }
-
-    // per-field per-(term, doc) boosted partials, unioned across fields
-    def fieldScores(terms: Seq[String]): DataFrame =
-      fields.map { case (idx, boost) =>
-        new RelationalPath(idx).scoredTf(terms)
-          .select(col("term"), col("docId"), col("doc_id"),
-            (col("score") * lit(boost)).as("ws"))
-      }.reduce(_ unionByName _)
-
-    // DisMax per (doc, term) across fields (tiebreak folds the
-    // non-winning fields in at `tie` weight), then Boolean over terms.
-    // Single-field qf (the common serving shape): the cross-field
-    // DisMax is the identity — scoredTf already emits exactly one row
-    // per (term, docId), so max-of-one ≡ the row and the groupBy would
-    // be a full shuffle of the widest frame for nothing; skip it.
-    val tsCol =
-      if (tie == 0.0) max("ws")
-      else max("ws") + lit(tie) * (sum("ws") - max("ws"))
-    val perTerm =
-      if (fields.length == 1)
-        fieldScores(scoredTerms)
-          .select(col("docId"), col("doc_id"), col("term"), col("ws").as("ts"))
-      else
-        fieldScores(scoredTerms)
-          .groupBy("docId", "doc_id", "term")
-          .agg(tsCol.as("ts"))
-    val perDoc = perTerm
-      .withColumn("isMust", col("term").isin(p.must: _*))
-      .groupBy("docId", "doc_id")
-      .agg(sum("ts").as("s"),
-        sum(when(col("isMust"), 1).otherwise(0)).as("nMust"),
-        sum(when(!col("isMust"), 1).otherwise(0)).as("nShould"))
-      .filter(col("nMust") === p.must.length)
-    val mmFiltered =
-      if (p.should.nonEmpty && p.mmCount > 0)
-        perDoc.filter(col("nShould") >= p.mmCount)
-      else perDoc
-    var out = mmFiltered.select(col("docId"), col("doc_id"), col("s"))
-    if (p.mustNot.nonEmpty) {
-      // excluded if the term matches ANY qf field — only matching
-      // docIds are needed, so read the raw tf table per field (as
-      // boolTopK does) instead of running the BM25 scoring pipeline
-      // (term-stats broadcast + docs join + score projection) on terms
-      // whose scores are discarded
-      val excluded = fields.map { case (idx, _) =>
-        new RelationalPath(idx).tfTable(p.mustNot)
-          .toDF("term", "docId", "tf").select("docId")
-      }.reduce(_ union _).distinct()
-      out = out.join(excluded, Seq("docId"), "left_anti")
-    }
-    // phrase boosts: full phrase (pf), bigram (pf2), trigram (pf3)
-    // shingles of the positional order — computed for ALL grams of ALL
-    // phrase fields in ONE batched pass per distinct field
-    // (RelationalPath.phraseFreqs: one position shuffle, every gram
-    // counted in-group), then folded into the score as a single Column
-    // expression in the PINNED additive order (fields in list order,
-    // grams left→right, pf before pf2 before pf3) with the exact
-    // per-gram FP op sequence of the one-join-per-gram path it
-    // replaces: s ← s + boost·coalesce(sumIdf·(ptf/(ptf + 1.2·(0.25 +
-    // 0.75·dlq/avgdl))), 0). A miss keeps the doc at +0.0 — pf never
-    // adds or removes hits.
-    if (gramSeq.nonEmpty) {
-      val gramFields = gramSeq.map(_.field).distinct
-      // per distinct field: df lookup (one bounded collect), active
-      // gram contents (every term in the dictionary — a gram with an
-      // absent term scores 0 everywhere, exactly the empty frame the
-      // per-gram path produced), one batched freq frame, one left join
-      val perField: Map[IndexView, (Map[String, Long], IndexedSeq[Seq[String]], Int)] =
-        gramFields.zipWithIndex.map { case (idx, fi) =>
-          val rel = new RelationalPath(idx)
-          val mine = gramSeq.filter(_.field == idx)
-          val dfOf = dfLookup(idx, mine.flatMap(_.gram).distinct)
-          val contents = mine.map(_.gram).distinct
-            .filter(_.forall(dfOf.contains)).toIndexedSeq
-          if (contents.nonEmpty) {
-            val ff = rel.phraseFreqs(contents)
-              .select(col("docId"), col("ptfs").as(s"__ptfs$fi"),
-                col("dlq").as(s"__pdlq$fi"))
-            out = out.join(ff, Seq("docId"), "left")
-          }
-          idx -> ((dfOf, contents, fi))
-        }.toMap
-      var sCol = col("s")
-      gramSeq.foreach { case GramSpec(idx, boost, gram) =>
-        val (dfOf, contents, fi) = perField(idx)
-        val ci = contents.indexOf(gram)
-        if (ci >= 0) {
-          val n = idx.stats.docCount
-          var sumIdf = 0.0 // phrase-order fold, like the scorer path
-          gram.foreach(t =>
-            sumIdf += math.log(1.0 + (n - dfOf(t) + 0.5) / (dfOf(t) + 0.5)))
-          val ptf = element_at(col(s"__ptfs$fi"), lit(ci))
-          val ps = lit(sumIdf) * (ptf / (ptf +
-            lit(1.2) * (lit(0.25) + lit(0.75) *
-              col(s"__pdlq$fi").cast("double") /
-              lit(new RelationalPath(idx).avgdlDouble))))
-          sCol = sCol + lit(boost) * coalesce(ps, lit(0.0))
-        }
-      }
-      out = out.withColumn("s", sCol)
-        .drop(perField.values.flatMap { case (_, cs, fi) =>
-          if (cs.nonEmpty) Seq(s"__ptfs$fi", s"__pdlq$fi") else Nil
-        }.toSeq: _*)
-    }
-    bq.foreach { case (rawTerm, boost) =>
-      // boost query: primary-field BM25 of the term, added where it
-      // matches (left join keeps non-matching hits at +0). The term
-      // goes through the same fold as every parsed query term — the
-      // dictionary stores lowercased terms, so a raw mixed-case bq
-      // would silently boost nothing.
-      val term = Analysis.lowercase(rawTerm)
-      val bScores = new RelationalPath(fields.head._1).scoredTf(Seq(term))
-        .select(col("docId"), col("score").as("bqs"))
-      out = out.join(bScores, Seq("docId"), "left")
-        .withColumn("s",
-          col("s") + lit(boost) * coalesce(col("bqs"), lit(0.0)))
-        .drop("bqs")
-    }
     import spark.implicits._
-    bf.foreach { fnCol =>
-      // evaluate the boost function over the primary field's docs row
-      // and ADD it (edismax bf is additive; `boost` would multiply).
-      // LEFT-join semantics + coalesce(0): bf can never add or remove
-      // hits, and a null-valued function (e.g. log(0)) contributes 0
-      // instead of nulling the whole score — Solr bf semantics.
-      //
-      // The plan choice needs |hits|, but probing it with a blocking
-      // limit().collect() would evaluate the whole hit pipeline twice
-      // and add a serial round-trip to the hot path. Instead the hit
-      // count is UPPER-BOUNDED from term document frequencies alone
-      // (no job in warm mode — the dictionary df map lives on the
-      // driver): every hit matches all must terms in some field /
-      // at least one should term, so |hits| ≤ min over must of
-      // Σ_fields df, else Σ over should of Σ_fields df.
-      val dfsByField: Seq[Map[String, Long]] =
-        fields.map { case (idx, _) => dfLookup(idx, scoredTerms) }
-      def sumDf(t: String): Long = dfsByField.map(_.getOrElse(t, 0L)).sum
-      val hitBound: Long =
-        if (p.must.nonEmpty) p.must.map(sumDf).min
-        else p.should.map(sumDf).sum
-      if (hitBound <= bfCap) {
-        // the entire hit set is provably ≤ the cap: materialize it
-        // once (one job), fetch bf features with the candidate ids
-        // PUSHED into the feature scan (row-group pruning — asserted
-        // in PlanSpec), and finish ranking on the driver with the same
-        // comparator the distributed tail uses.
-        val rows = out
-          .select(col("docId").cast("long"), col("doc_id").cast("long"),
-            col("s").cast("double"))
-          .as[(Long, Long, Double)].collect()
-        if (rows.isEmpty)
-          return Seq.empty[(Int, Long)].toDF("rank", "doc_id")
-        val bfMap: Map[Long, Double] =
-          bfFeatures(fields.head._1, fnCol, Some(rows.map(_._1).toSeq))
-            .select(col("docId").cast("long"), col("__bf").cast("double"))
-            .collect()
-            .map(r => r.getLong(0) ->
-              (if (r.isNullAt(1)) 0.0 else r.getDouble(1))).toMap
-        val winners = rows
-          .map { case (d, id, s) => (d, id, s + bfMap.getOrElse(d, 0.0)) }
-          .sortBy { case (d, _, s) => (-s, d) }
-          .take(k)
-        return winners.toSeq.zipWithIndex
-          .map { case ((_, id, _), i) => (i + 1, id) }
-          .toDF("rank", "doc_id")
-      }
-      // above the cap the distributed left join is the correct plan —
-      // and it is the query's ONLY job (no probe round-trip)
-      out = out.join(bfFeatures(fields.head._1, fnCol, None), Seq("docId"), "left")
-        .withColumn("s", col("s") + coalesce(col("__bf"), lit(0.0)))
-        .drop("__bf")
-    }
-    val winners = out
-      .orderBy(desc("s"), asc("docId"))
-      .limit(k)
-      .select(col("docId").cast("long").as("docId"),
-        col("doc_id").cast("long").as("doc_id"), col("s").cast("double").as("s"))
-      .as[(Long, Long, Double)].collect()
-      .sortBy { case (d, _, s) => (-s, d) }
-    winners.toSeq.zipWithIndex
-      .map { case ((_, id, _), i) => (i + 1, id) }
-      .toDF("rank", "doc_id")
-  }
-
-  /** The single-pass kernel behind `topK` (see the eligibility comment
-    * there): every scoring component folded per doc inside one
-    * flatMapGroups over the query terms' decoded positions, unioned
-    * across the qf/phrase fields tagged by field ordinal. The
-    * double-precision op sequence mirrors the general plan expression
-    * for expression: per field ws = (idf_f·(tf/(tf+1.2·(0.25+0.75·
-    * dlq_f/avgdl_f))))·boost_f; per term ts = max_f(ws) + tie·(Σ_f(ws)
-    * − max_f(ws)); s = Σ ts must-then-should; then per gram in pinned
-    * order s += boost·(sumIdf·(ptf/(ptf+1.2·(0.25+0.75·dlq/avgdl))))
-    * with the gram field's stats; then bq in list order s +=
-    * boost·(idf·tfNorm) over the primary field. */
-  private def singlePassTopK(
-      qf: Seq[(graft.index.InvertedIndex, Double)],
-      p: Parsed, k: Int, tie: Double,
-      gramsIn: Seq[(graft.index.InvertedIndex, Double, Seq[String])],
-      bq: Seq[(String, Double)]): DataFrame = {
-    val spark = qf.head._1.spark
-    import spark.implicits._
-    def empty = Seq.empty[(Int, Long)].toDF("rank", "doc_id")
+    val empty = Seq.empty[(Long, Double)].toDF("docId", "s")
     // distinct indexes by reference — field ordinals; qf fields first
     // so ordinal < nQf ⇔ scored field
-    val idxs = scala.collection.mutable.ArrayBuffer.empty[graft.index.InvertedIndex]
-    def ordOf(i: graft.index.InvertedIndex): Int = {
+    val idxs = scala.collection.mutable.ArrayBuffer.empty[IndexView]
+    def ordOf(i: IndexView): Int = {
       val at = idxs.indexWhere(_ eq i)
       if (at >= 0) at else { idxs += i; idxs.length - 1 }
     }
-    qf.foreach { case (i, _) => ordOf(i) }
+    val qfOrd: Array[Int] = fields.map { case (i, _) => ordOf(i) }.toArray
+    val qfBoost: Array[Double] = fields.map(_._2).toArray
     val nQf = idxs.length
-    val qfOrd: Array[Int] = qf.map { case (i, _) => ordOf(i) }.toArray
-    val qfBoost: Array[Double] = qf.map(_._2).toArray
-    val gramSpecs: Array[(Int, Double, Array[String], Double)] =
-      gramsIn.flatMap { case (i, b, g) =>
-        val dfOf = i.termDfMap().get
-        // a gram with a dictionary-absent term scores 0 everywhere
-        // (the empty frame of the general plan) — dropped, order kept
-        if (g.forall(dfOf.contains)) {
-          val n = i.stats.docCount
-          var sumIdf = 0.0 // phrase-order fold, like the scorer path
-          g.foreach(t =>
-            sumIdf += math.log(1.0 + (n - dfOf(t) + 0.5) / (dfOf(t) + 0.5)))
-          Some((ordOf(i), b, g.toArray, sumIdf))
-        } else None
-      }.toArray
+    // pf/pf2/pf3 shingles of the positional order as (field ordinal,
+    // boost, gram), in the PINNED additive order (fields in list order,
+    // grams left→right, pf before pf2 before pf3); pf's one shingle is
+    // the whole sequence
+    val ps = p.positional
+    def shingles(fs: Seq[(IndexView, Double)], n: Int): Seq[(Int, Double, Seq[String])] =
+      if (ps.length < math.max(n, 2)) Nil
+      else fs.flatMap { case (i, b) =>
+        val f = ordOf(i)
+        ps.sliding(n).map(g => (f, b, g))
+      }
+    val grams = shingles(pf, ps.length) ++ shingles(pf2, 2) ++ shingles(pf3, 3)
     val nIdx = idxs.length
-    // per-ordinal driver stats + norms broadcasts
-    val dfs: Array[Map[String, Long]] = idxs.map(_.termDfMap().get).toArray
-    val dlqBs = idxs.map(_.dlqBroadcast().get).toArray
-    val avgdl: Array[Double] =
-      idxs.map(i => i.stats.sumTotalTermFreq.toDouble / i.stats.docCount).toArray
-    val urls = qf.head._1.urlMap().get
-    // a must term absent from EVERY qf field's dictionary is
-    // unsatisfiable
-    val qfOrdDistinct = qfOrd.distinct
-    if (!p.must.forall(t => qfOrdDistinct.exists(f => dfs(f).contains(t))))
-      return empty
     val bqList: Array[(String, Double)] =
-      bq.map { case (t, b) => (graft.analysis.Analysis.lowercase(t), b) }.toArray
+      bq.map { case (t, b) => (Analysis.lowercase(t), b) }.toArray
     val mustArr = p.must.toArray
     val shouldArr = p.should.toArray
     val mustNotArr = p.mustNot.toArray
     val mmCount = p.mmCount
-    val shouldNonEmpty = p.should.nonEmpty
-    // per-ordinal scan terms — per-query dictionary slices only (the
-    // task closure never captures the full df maps; norms ride the
-    // broadcasts)
-    val scanTerms: Array[Seq[String]] = Array.tabulate(nIdx) { f =>
+    // per-ordinal terms: a qf field reads every clause term (the
+    // primary field also the bq terms), a phrase field its gram terms
+    val wanted: Array[Seq[String]] = Array.tabulate(nIdx) { f =>
       val mine = scala.collection.mutable.LinkedHashSet.empty[String]
-      if (f < nQf && qfOrdDistinct.contains(f)) {
+      if (f < nQf) {
         (mustArr ++ shouldArr ++ mustNotArr).foreach(mine += _)
         if (f == qfOrd(0)) bqList.foreach(mine += _._1)
       }
-      gramSpecs.foreach { case (gf, _, g, _) => if (gf == f) g.foreach(mine += _) }
-      mine.toSeq.filter(dfs(f).contains)
+      grams.foreach { case (gf, _, g) => if (gf == f) g.foreach(mine += _) }
+      mine.toSeq
     }
+    // per-query dictionary slices (the task closure never captures a
+    // full df map); a term absent from a field matches nothing there
+    val dfs: Array[Map[String, Long]] =
+      Array.tabulate(nIdx)(f => dfLookup(idxs(f), wanted(f)))
+    // a must term absent from EVERY qf field's dictionary is
+    // unsatisfiable
+    if (!p.must.forall(t => (0 until nQf).exists(f => dfs(f).contains(t))))
+      return empty
+    val scanTerms: Array[Seq[String]] =
+      Array.tabulate(nIdx)(f => wanted(f).filter(dfs(f).contains))
     if (scanTerms.forall(_.isEmpty)) return empty
-    // idf for the SCAN terms only — never a full-dictionary map per
-    // query (a 10^6-term warm field would pay O(|dict|) log() calls on
-    // the hot path for a handful of needed entries)
-    val idfSlice: Array[Map[String, Double]] =
-      Array.tabulate(nIdx) { f =>
-        val n = idxs(f).stats.docCount.toDouble
-        scanTerms(f).map { t =>
-          val df = dfs(f)(t)
-          t -> math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        }.toMap
-      }
-    val positions: org.apache.spark.sql.Dataset[(Int, Long, String, Seq[Int])] =
-      idxs.toSeq.zipWithIndex.collect {
-        case (i, f) if scanTerms(f).nonEmpty =>
-          new RelationalPath(i).positionsTable(scanTerms(f))
-            .select(lit(f).as("fi"), col("docId").cast("long"),
-              col("term"), col("pos"))
-            .as[(Int, Long, String, Seq[Int])]
+    val idf: Array[Map[String, Double]] = Array.tabulate(nIdx) { f =>
+      val n = idxs(f).stats.docCount.toDouble
+      dfs(f).map { case (t, df) => t -> math.log(1.0 + (n - df + 0.5) / (df + 0.5)) }
+    }
+    val avgdl: Array[Double] =
+      idxs.map(i => i.stats.sumTotalTermFreq.toDouble / i.stats.docCount).toArray
+    // a gram with a dictionary-absent term scores 0 everywhere — dropped,
+    // order kept
+    val gramSpecs: Array[(Int, Double, Array[String], Double)] =
+      grams.collect { case (f, b, g) if g.forall(dfs(f).contains) =>
+        val n = idxs(f).stats.docCount
+        var sumIdf = 0.0 // phrase-order fold, like the scorer path
+        g.foreach(t =>
+          sumIdf += math.log(1.0 + (n - dfs(f)(t) + 0.5) / (dfs(f)(t) + 0.5)))
+        (f, b, g.toArray, sumIdf)
+      }.toArray
+    val positions: org.apache.spark.sql.Dataset[(Int, Long, String, Seq[Int], Int)] =
+      idxs.indices.filter(f => scanTerms(f).nonEmpty).map { f =>
+        val idx = idxs(f)
+        val rows = new RelationalPath(idx).positionsTable(scanTerms(f))
+        // live docs only — the field's tombstones anti-joined, the rule
+        // docsWithId applies
+        val live =
+          if (idx.hasDeletes) rows.join(idx.tombstones.toDF("docId"), Seq("docId"), "left_anti")
+          else rows
+        live.select(lit(f).as("fi"), col("docId").cast("long"), col("term"),
+            col("pos"), col("dlq"))
+          .as[(Int, Long, String, Seq[Int], Int)]
       }.reduce(_ union _)
-    val tieW = tie
-    val qfOrdL = qfOrd
-    val qfBoostL = qfBoost
     val scored = positions
       .groupByKey(_._2)
       .flatMapGroups { (docId, it) =>
         val posOf = Array.fill(nIdx)(
           scala.collection.mutable.HashMap.empty[String, Array[Int]])
-        it.foreach { case (f, _, t, ps) => posOf(f)(t) = ps.toArray }
+        // per-field length norm: every posting of (field, doc) carries
+        // the same one
+        val dlq = new Array[Double](nIdx)
+        it.foreach { case (f, _, t, pos, d) => posOf(f)(t) = pos.toArray; dlq(f) = d.toDouble }
         def presentAny(t: String): Boolean = {
           var f = 0
           var found = false
-          while (!found && f < qfOrdDistinct.length) {
-            found = posOf(qfOrdDistinct(f)).contains(t); f += 1
+          while (!found && f < nQf) {
+            found = posOf(f).contains(t); f += 1
           }
           found
         }
@@ -514,38 +302,23 @@ object EDisMax {
           }
           ok = nMust == mustArr.length &&
             (mustArr.nonEmpty || nShould >= 1) &&
-            (!shouldNonEmpty || mmCount == 0 || nShould >= mmCount)
-        }
-        // per-doc per-field norms, hoisted once (not per term); a doc
-        // absent from any norms map is dropped, like the general plan's
-        // inner docs join
-        val dlqD = new Array[Double](nIdx)
-        if (ok) {
-          var f = 0
-          while (ok && f < nIdx) {
-            dlqBs(f).value.get(docId) match {
-              case Some(d) => dlqD(f) = d.toDouble
-              case None => ok = false
-            }
-            f += 1
-          }
+            (shouldArr.isEmpty || mmCount == 0 || nShould >= mmCount)
         }
         if (!ok) Iterator.empty
         else {
           def tfNormAt(f: Int, tf: Double): Double =
-            tf / (tf + 1.2 * (0.25 + 0.75 * dlqD(f) / avgdl(f)))
+            tf / (tf + 1.2 * (0.25 + 0.75 * dlq(f) / avgdl(f)))
           // ts = cross-field dismax of the per-field weighted partials
           def termTs(t: String): Double = {
             var mx = 0.0
             var sm = 0.0
             var any = false
             var q = 0
-            while (q < qfOrdL.length) {
-              val f = qfOrdL(q)
-              val ps = posOf(f).getOrElse(t, null)
-              if (ps != null) {
-                val ws = (idfSlice(f)(t) * tfNormAt(f, ps.length.toDouble)) *
-                  qfBoostL(q)
+            while (q < qfOrd.length) {
+              val f = qfOrd(q)
+              val tps = posOf(f).getOrElse(t, null)
+              if (tps != null) {
+                val ws = (idf(f)(t) * tfNormAt(f, tps.length.toDouble)) * qfBoost(q)
                 if (!any || ws > mx) mx = ws
                 sm += ws
                 any = true
@@ -553,8 +326,8 @@ object EDisMax {
               q += 1
             }
             if (!any) 0.0
-            else if (tieW == 0.0) mx
-            else mx + tieW * (sm - mx)
+            else if (tie == 0.0) mx
+            else mx + tie * (sm - mx)
           }
           var s = 0.0
           i = 0
@@ -565,8 +338,8 @@ object EDisMax {
           while (i < shouldArr.length) {
             val ts = termTs(shouldArr(i)); if (ts != 0.0) s += ts; i += 1
           }
-          // grams in pinned order — the phraseFreqs counting kernel on
-          // the gram field's positions
+          // grams in pinned order: exact phrase frequency on the gram
+          // field's positions
           var g = 0
           while (g < gramSpecs.length) {
             val (gf, boost, gram, sumIdf) = gramSpecs(g)
@@ -581,9 +354,9 @@ object EDisMax {
               val tailSets = new Array[java.util.HashSet[Integer]](gram.length)
               m = 1
               while (m < gram.length) {
-                val ps = pog(gram(m))
-                val set = new java.util.HashSet[Integer](ps.length * 2)
-                ps.foreach(pp => set.add(pp))
+                val gps = pog(gram(m))
+                val set = new java.util.HashSet[Integer](gps.length * 2)
+                gps.foreach(pp => set.add(pp))
                 tailSets(m) = set
                 m += 1
               }
@@ -599,36 +372,36 @@ object EDisMax {
                 if (good) ptf += 1
                 j += 1
               }
-              if (ptf > 0) {
-                val ptfD = ptf.toDouble
-                val ps2 = sumIdf * tfNormAt(gf, ptfD)
-                s = s + boost * ps2
-              }
+              if (ptf > 0) s = s + boost * (sumIdf * tfNormAt(gf, ptf.toDouble))
             }
             g += 1
           }
           // bq in list order: primary-field BM25 of the term (no field
-          // boost — the general plan's scoredTf score column)
+          // boost)
           var b = 0
           while (b < bqList.length) {
             val (t, boost) = bqList(b)
-            val f0 = qfOrdL(0)
-            val ps = posOf(f0).getOrElse(t, null)
-            if (ps != null)
-              s = s + boost * (idfSlice(f0)(t) * tfNormAt(f0, ps.length.toDouble))
+            val f0 = qfOrd(0)
+            val tps = posOf(f0).getOrElse(t, null)
+            if (tps != null)
+              s = s + boost * (idf(f0)(t) * tfNormAt(f0, tps.length.toDouble))
             b += 1
           }
           Iterator.single((docId, s))
         }
       }
-    val winners = scored.toDF("docId", "s")
-      .orderBy(desc("s"), asc("docId")).limit(k)
-      .as[(Long, Double)].collect()
-      .sortBy { case (d, s) => (-s, d) }
-    winners.toSeq.zipWithIndex.map { case ((d, _), i) =>
-      val u = urls(d)
-      (i + 1, u.substring(u.lastIndexOf('/') + 1).toLong)
-    }.toDF("rank", "doc_id")
+      .toDF("docId", "s")
+    bf.fold(scored) { fn =>
+      // the boost function over the primary field's docs row, ADDED
+      // (edismax bf is additive; `boost` would multiply). LEFT join +
+      // coalesce(0): bf never adds or removes hits, and a null-valued
+      // function (e.g. log(0)) contributes 0 instead of nulling the
+      // whole score — Solr bf semantics.
+      val features = new RelationalPath(fields.head._1).docsWithId
+        .select(col("docId"), fn.as("__bf"))
+      scored.join(features, Seq("docId"), "left")
+        .select(col("docId"), (col("s") + coalesce(col("__bf"), lit(0.0))).as("s"))
+    }
   }
 
   /** Term dfs over one field: the warm driver-side dictionary when the
@@ -642,23 +415,4 @@ object EDisMax {
         terms.flatMap(t => m.get(t).map(t -> _)).toMap
       case _ => new RelationalPath(idx).termDfs(terms)
     }
-
-  /** Hit-count cap for shipping candidate ids as a pushed isin
-    * predicate into the bf feature scan; larger hit sets use the
-    * distributed join instead (an isin of millions of ids would bloat
-    * the plan and the broadcast). */
-  val BfPushdownCap = 10000
-
-  /** The bf feature frame: (docId, __bf) over the primary field's docs
-    * table, pruned to `candidateIds` when given (the isin predicate
-    * reaches the parquet scan as PushedFilters — asserted in PlanSpec). */
-  def bfFeatures(primary: IndexView, fnCol: org.apache.spark.sql.Column,
-                 candidateIds: Option[Seq[Long]]): DataFrame = {
-    val docs = new RelationalPath(primary).docsWithId
-    val pruned = candidateIds match {
-      case Some(ids) => docs.filter(col("docId").isin(ids: _*))
-      case None => docs
-    }
-    pruned.select(col("docId"), fnCol.as("__bf"))
-  }
 }

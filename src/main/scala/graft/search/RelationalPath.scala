@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.index.InvertedIndex
-import graft.util.{PFor, VarInt}
+import graft.util.{PFor, SmallFloat, VarInt}
 
 /** The engine's relational face: the same queries the scorer path
   * answers, expressed as declarative DataFrame plans over the decoded
@@ -674,9 +674,13 @@ final class RelationalPath(idx: graft.index.IndexView) {
     rankTopK(p.join(f, Seq("docId"), "left_semi"), k)
   }
 
-  /** Decoded per-(term, doc) position lists for `terms` — the shared
-    * position source of spanNearDocs / phraseDocs / phraseScores (one
-    * place knows the block/position format). */
+  /** Decoded per-(term, doc) position lists for `terms`, each with the
+    * doc's quantized length decoded from the posting's norm byte — the
+    * shared position source of spanNearDocs / phraseDocs / phraseScores
+    * and the edismax kernel (one place knows the block/position
+    * format). The build writes that byte with the same
+    * `SmallFloat.intToByte4(dl)` that gives the docs table its `dlq`,
+    * so `dlq` here equals the docs table's (pinned in BlockNormsSpec). */
   private[search] def positionsTable(terms: Seq[String]): DataFrame =
     idx.postings.filter(col("term").isin(terms.distinct: _*))
       .flatMap { r =>
@@ -684,9 +688,10 @@ final class RelationalPath(idx: graft.index.IndexView) {
           val docs = PFor.decodeDeltas(b.docs, b.count, b.firstDocId)
           val tfs = PFor.decodeInts(b.tfs, b.count)
           val pos = VarInt.decodePositions(b.positions, tfs)
-          docs.indices.iterator.map(i => (r.term, docs(i), pos(i)))
+          docs.indices.iterator.map(i =>
+            (r.term, docs(i), pos(i), SmallFloat.LengthTable(b.norms(i) & 0xFF)))
         }
-      }.toDF("term", "docId", "pos")
+      }.toDF("term", "docId", "pos", "dlq")
 
   /** Bounded driver lookup of the terms' document frequencies (the
     * same shape as the Searcher's broadcast term stats). */
@@ -734,101 +739,21 @@ final class RelationalPath(idx: graft.index.IndexView) {
   /** BM25-scored exact phrase (PhraseQuery scoring [U lucene/core/
     * .../search/PhraseQuery.java]: idf = Σ constituent-term idfs in
     * phrase order WITH multiplicity, tf = phrase frequency) — the
-    * scoring twin of `phraseDocs`, used by edismax `pf` boosts.
-    * Output: (docId, doc_id, ps) for docs where the phrase occurs.
-    * The term-df lookup is a bounded driver collect (≤ |phrase| rows,
-    * the same shape as the Searcher's broadcast term stats). */
-  def phraseScores(terms: Seq[String]): DataFrame =
-    phraseScoresFrom(positionsTable(terms), termDfs(terms), terms)
-
-  /** Exact phrase frequencies for MANY grams in ONE distributed pass —
-    * the edismax pf/pf2/pf3 batch kernel. ONE shuffle of the decoded
-    * positions of all gram terms, grouped by doc; every gram's phrase
-    * tf is counted inside the group, so plan depth (and shuffle count)
-    * is CONSTANT in the gram count — replacing the one k-way position
-    * self-join per gram that made pf2 latency linear in the bigram
-    * count. Mirrors how the reference evaluates all pf/pf2/pf3
-    * PhraseQueries in one pass over the shared per-segment term
-    * positions [U solr/core/.../search/ExtendedDismaxQParser.java
-    * addShingledPhraseQueries; lucene ExactPhraseMatcher].
-    *
-    * Output: (docId, ptfs: Map[gramIdx → phrase tf], dlq) — live docs
-    * with at least one matching gram only; a gram with ptf 0 has no
-    * map entry. The per-gram count is integer-exact identical to
-    * `phraseScoresFrom`'s array_contains fold. */
-  private[search] def phraseFreqs(grams: IndexedSeq[Seq[String]]): DataFrame = {
-    require(grams.nonEmpty && grams.forall(_.length >= 2),
-      "phraseFreqs needs grams of length >= 2")
-    val allTerms = grams.flatten.distinct
-    val gramArr: Array[Array[String]] = grams.map(_.toArray).toArray
-    val freqs = positionsTable(allTerms)
-      .select(col("docId").cast("long"), col("term"), col("pos"))
-      .as[(Long, String, Seq[Int])]
-      .groupByKey(_._1)
-      .flatMapGroups { (docId, it) =>
-        val posOf = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-        it.foreach { case (_, t, ps) => posOf(t) = ps.toArray }
-        val setOf = posOf.map { case (t, ps) =>
-          val s = new java.util.HashSet[Integer](ps.length * 2)
-          ps.foreach(p => s.add(p))
-          t -> s
-        }
-        val hits = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-        var g = 0
-        while (g < gramArr.length) {
-          val gram = gramArr(g)
-          var ok = true
-          var i = 0
-          while (ok && i < gram.length) { ok = posOf.contains(gram(i)); i += 1 }
-          if (ok) {
-            val first = posOf(gram(0))
-            var ptf = 0
-            var j = 0
-            while (j < first.length) {
-              val p = first(j)
-              var m = 1
-              var good = true
-              while (good && m < gram.length) {
-                good = setOf(gram(m)).contains(p + m)
-                m += 1
-              }
-              if (good) ptf += 1
-              j += 1
-            }
-            if (ptf > 0) hits += ((g, ptf.toDouble))
-          }
-          g += 1
-        }
-        if (hits.isEmpty) Iterator.empty
-        else Iterator.single((docId, hits.toMap))
-      }
-      .toDF("docId", "ptfs")
-    // live-docs + dlq in one inner join (the same role as
-    // phraseScoresFrom's docsWithId join: tombstoned docs contribute 0)
-    freqs.join(docsWithId.select(col("docId"), col("dlq")), "docId")
-  }
-
-  /** The double-precision BM25 kernel constants exposed for callers
-    * that re-state the phrase score as a Column (edismax batch boosts):
-    * avgdl as the double the in-class formulas use. */
-  private[search] def avgdlDouble: Double = avgdlD
-
-  /** phraseScores over a PRE-BUILT position table + df lookup, so a
-    * caller boosting many grams of the same token set (edismax
-    * pf/pf2/pf3) pays ONE dictionary collect and shares one decode
-    * definition instead of one per gram. */
-  private[search] def phraseScoresFrom(hits: DataFrame,
-                                       dfOf: Map[String, Long],
-                                       terms: Seq[String]): DataFrame = {
+    * scoring twin of `phraseDocs`, and the statement of edismax `pf`
+    * boosts. Output: (docId, doc_id, ps) for docs where the phrase
+    * occurs. The term-df lookup is a bounded driver collect (≤ |phrase|
+    * rows, the same shape as the Searcher's broadcast term stats). */
+  def phraseScores(terms: Seq[String]): DataFrame = {
     require(terms.length >= 2, "a phrase needs at least two terms")
-    val none = docsWithId.select(col("docId"), col("doc_id"))
-      .limit(0).withColumn("ps", lit(0.0))
-    if (terms.exists(t => !dfOf.contains(t))) return none
+    val dfOf = termDfs(terms)
+    if (terms.exists(t => !dfOf.contains(t)))
+      return docsWithId.select(col("docId"), col("doc_id"))
+        .limit(0).withColumn("ps", lit(0.0))
     val n = idx.stats.docCount
     var sumIdf = 0.0 // phrase-order fold, like the scorer path
     terms.foreach(t =>
       sumIdf += math.log(1.0 + (n - dfOf(t) + 0.5) / (dfOf(t) + 0.5)))
-    phraseJoined(hits, terms)
+    phraseJoined(positionsTable(terms), terms)
       .withColumn("ptf", size(filter(col("p0"), p =>
         terms.indices.tail.map(i => array_contains(col(s"p$i"), p + i))
           .foldLeft(lit(true))(_ && _))).cast("double"))

@@ -102,7 +102,9 @@ final class Searcher(idx: graft.index.IndexView) extends Serializable {
     rankedResult(combined)
   }
 
-  private def rankedResult(merged: Array[(Long, Float)]): DataFrame = {
+  /** (rank, docId, url, score) for hits already in rank order — the
+    * GET_FIELDS phase, shared with EDisMax.topK. */
+  private[search] def rankedResult(merged: Array[(Long, Float)]): DataFrame = {
     if (merged.isEmpty) {
       return idx.spark.emptyDataset[(Int, Long, String, Float)]
         .toDF("rank", "docId", "url", "score")

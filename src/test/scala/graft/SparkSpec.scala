@@ -20,4 +20,17 @@ object TestSpark {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** A private copy of a committed index directory, for a spec that
+    * warms, tombstones or compacts it without touching a shared index. */
+  def copyIndex(i: graft.index.InvertedIndex, prefix: String): graft.index.InvertedIndex = {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(i.dir)
+    val dst = Files.createTempDirectory(prefix)
+    Files.walk(src).forEach { f =>
+      val t = dst.resolve(src.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
+    }
+    graft.index.InvertedIndex.open(spark, dst.toString)
+  }
 }

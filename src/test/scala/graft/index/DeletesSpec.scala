@@ -106,6 +106,31 @@ class DeletesSpec extends SparkSpec {
     assert(fresh.stats.docCount === 3)
   }
 
+  test("compacting a warm()ed reader: the new reader serves the compacted tables") {
+    // warm() pins postings/docs/termstats under the directory's parquet
+    // paths; the reader compact returns plans the same paths, so the
+    // old pins must not survive the in-place rewrite
+    val dir = Files.createTempDirectory("graft-del-warm").toString
+    val idx = IndexBuilder.build(spark, mkPages(texts), dir,
+      IndexConfig(numPartitions = 2, partsPerSegment = 1)).warm()
+    assert(new Searcher(idx).topK(TermQ("spark"), 10).collect().length === 4)
+    val doomed = Set(1, 4)
+    Deletes.deleteByUrl(idx, doomed.toSeq.map(i => f"https://d/$i%04d"))
+    val compacted = Deletes.compact(idx)
+    assert(compacted.docs.count() === 3)
+    val oracle = new SpecOracle(texts.zipWithIndex.collect {
+      case (t, i) if !doomed(i) => (f"https://d/$i%04d", t, "en")
+    })
+    val s2 = new Searcher(compacted)
+    Seq[Query](TermQ("spark"), Query.or("join", "window"), Query.and("spark", "sort"))
+      .foreach { q =>
+        val got = s2.topK(q, 10).collect()
+          .map(r => (r.getInt(0), r.getString(2), r.getFloat(3))).toSeq
+        val expected = oracle.topK(q, 10).map { case (rank, _, u, s) => (rank, u, s) }
+        assert(got === expected, s"post-compact mismatch on $q")
+      }
+  }
+
   test("randomized deletes: exclusion pre-compact, oracle identity post-compact") {
     val rnd = new scala.util.Random(4242L)
     val vocab = Seq("the", "spark", "join", "merge", "sort", "window",

@@ -1,15 +1,101 @@
 package graft.search
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 import graft.SparkEntry
+import graft.index.{Deletes, IndexView}
 
 /** edismax dialect: parser goldens (qf/mm semantics) and execution
-  * agreement with the single-field relational path. */
+  * agreement with the relational statement of the same query. */
 class EDisMaxSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val textIdx = SparkEntry.index(spark, sfDir)
   private lazy val urlIdx = SparkEntry.urlIndex(spark, sfDir)
+
+  private lazy val warmText = copyIndex(textIdx, "edismax-warm").warm()
+  /** The text field with every third doc tombstoned, and the corpus
+    * doc_ids it tombstoned. */
+  private lazy val (tombText, tombDocIds) = {
+    val i = copyIndex(textIdx, "edismax-tomb")
+    val urls = i.docs.select("docId", "url").collect()
+      .collect { case r if r.getLong(0) % 3 == 0 => r.getString(1) }.toSeq
+    Deletes.deleteByUrl(i, urls)
+    (i, urls.map(u => u.substring(u.lastIndexOf('/') + 1).toLong).toSet)
+  }
+
+  /** A plain IndexView over the same tables: no driver-side dictionary
+    * or url cache, so every lookup runs as a Spark job (cold input). */
+  private def plain(i: IndexView): IndexView = new IndexView {
+    def spark = i.spark
+    def stats = i.stats
+    def postings = i.postings
+    def docs = i.docs
+    def termStats = i.termStats
+  }
+
+  private def ranks(df: DataFrame): Seq[(Int, Long)] =
+    df.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+
+  /** The general plan: edismax stated relationally, one operator per
+    * clause — per-field RelationalPath.scoredTf partials × boost, the
+    * cross-field DisMax as a groupBy per (doc, term), must/mm counting
+    * over terms, mustNot as an anti join, then in the pinned additive
+    * order one phraseScores left join per gram, the bq left joins and
+    * the bf left join over docsWithId. The same parse normalization
+    * and the same double-precision formulas as EDisMax.topK, so ranks
+    * must agree exactly. */
+  private def generalPlan(fields: Seq[(IndexView, Double)], p0: EDisMax.Parsed,
+      k: Int = 10, tie: Double = 0.0, bf: Option[Column] = None,
+      pf: Seq[(IndexView, Double)] = Nil, pf2: Seq[(IndexView, Double)] = Nil,
+      pf3: Seq[(IndexView, Double)] = Nil,
+      bq: Seq[(String, Double)] = Nil): Seq[(Int, Long)] = {
+    val must = p0.must.distinct
+    val should = p0.should.distinct.filterNot(must.contains)
+    val mm = math.max(0, math.min(p0.mmCount, should.length))
+    val mustNot = p0.mustNot.distinct
+    val ts = if (tie == 0.0) max("ws") else max("ws") + lit(tie) * (sum("ws") - max("ws"))
+    var out = fields.map { case (i, b) =>
+      new RelationalPath(i).scoredTf(must ++ should)
+        .select(col("term"), col("docId"), col("doc_id"), (col("score") * lit(b)).as("ws"))
+    }.reduce(_ unionByName _)
+      .groupBy("docId", "doc_id", "term").agg(ts.as("ts"))
+      .withColumn("isMust", col("term").isin(must: _*))
+      .groupBy("docId", "doc_id")
+      .agg(sum("ts").as("s"),
+        sum(when(col("isMust"), 1).otherwise(0)).as("nMust"),
+        sum(when(!col("isMust"), 1).otherwise(0)).as("nShould"))
+      .filter(col("nMust") === must.length && col("nShould") >= mm)
+      .select("docId", "doc_id", "s")
+    if (mustNot.nonEmpty)
+      out = out.join(fields.map { case (i, _) =>
+        new RelationalPath(i).scoredTf(mustNot).select("docId")
+      }.reduce(_ union _), Seq("docId"), "left_anti")
+    def addBoost(boost: Double, scores: DataFrame): Unit =
+      out = out.join(scores.toDF("docId", "__b"), Seq("docId"), "left")
+        .withColumn("s", col("s") + lit(boost) * coalesce(col("__b"), lit(0.0)))
+        .drop("__b")
+    val ps = p0.positional
+    val grams =
+      (if (ps.length >= 2) pf.map { case (i, b) => (i, b, ps) } else Nil) ++
+      (if (ps.length >= 2) pf2.flatMap { case (i, b) => ps.sliding(2).map((i, b, _)) } else Nil) ++
+      (if (ps.length >= 3) pf3.flatMap { case (i, b) => ps.sliding(3).map((i, b, _)) } else Nil)
+    grams.foreach { case (i, b, g) =>
+      addBoost(b, new RelationalPath(i).phraseScores(g).select("docId", "ps"))
+    }
+    val primary = new RelationalPath(fields.head._1)
+    bq.foreach { case (t, b) =>
+      addBoost(b, primary.scoredTf(Seq(t.toLowerCase)).select("docId", "score"))
+    }
+    bf.foreach(fn => addBoost(1.0, primary.docsWithId.select(col("docId"), fn)))
+    out.orderBy(desc("s"), asc("docId")).limit(k)
+      .select(col("docId").cast("long"), col("doc_id").cast("long"), col("s"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy { case (d, _, s) => (-s, d) }
+      .zipWithIndex.map { case ((_, id, _), i) => (i + 1, id) }.toSeq
+  }
 
   test("parser: occurs, dedup, percentage mm floor") {
     val p = EDisMax.parse("+Spark -merge data window data", "50%")
@@ -74,7 +160,6 @@ class EDisMaxSpec extends SparkSpec {
   }
 
   test("tie: 0 is pure dismax, 1 degrades to plain sum, 0.3 in between") {
-    import org.apache.spark.sql.functions._
     val fields = Seq(textIdx -> 2.0, urlIdx -> 1.0)
     val p = EDisMax.parse("spark src3", "0")
     // tie defaulted ≡ tie = 0 explicitly (same plan branch not required,
@@ -98,7 +183,6 @@ class EDisMaxSpec extends SparkSpec {
   }
 
   test("bf: additive boost function shifts scores by the doc feature") {
-    import org.apache.spark.sql.functions._
     val fields = Seq(textIdx -> 1.0)
     val p = EDisMax.parse("spark", "0")
     // constant bf cannot change the ranking, only the (hidden) score
@@ -115,16 +199,6 @@ class EDisMaxSpec extends SparkSpec {
       .orderBy(desc("s"), asc("docId")).limit(10)
       .collect().map(_.getLong(1)).toSeq
     assert(byDl === oracle)
-  }
-
-  test("bf: distributed-join path (cap 0) matches the pushed-isin driver path") {
-    import org.apache.spark.sql.functions._
-    val fields = Seq(textIdx -> 1.0)
-    val p = EDisMax.parse("spark merge", "0")
-    val fn = Some(log(col("dl") + lit(1L)))
-    val pushed = EDisMax.topK(fields, p, 10, bf = fn).collect().toSeq
-    val joined = EDisMax.topK(fields, p, 10, bf = fn, bfCap = 0).collect().toSeq
-    assert(pushed === joined)
   }
 
   test("pf: phrase boost never changes the hit set, boosts phrase docs") {
@@ -182,28 +256,28 @@ class EDisMaxSpec extends SparkSpec {
   }
 
   test("single-pass kernel ≡ general plan across query shapes") {
-    // a plain IndexView delegate is kernel-INELIGIBLE (the kernel
-    // pattern-matches InvertedIndex for its warm caches), so the same
-    // data runs the general relational plan — both plans must agree
-    // rank-for-rank on every query shape the kernel claims
-    val general: graft.index.IndexView = new graft.index.IndexView {
-      def spark = textIdx.spark
-      def stats = textIdx.stats
-      def postings = textIdx.postings
-      def docs = textIdx.docs
-      def termStats = textIdx.termStats
-    }
+    // every shape on four inputs: the index as the gates open it, a
+    // warm()ed copy, a cold plain IndexView, and a copy with every third
+    // doc tombstoned — one plan, and it must agree rank for rank with
+    // the relational statement of the query
     def both(q: String, mm: String, boost: Double = 1.0,
              pf: Boolean = false, pf2: Boolean = false, pf3: Boolean = false,
              bq: Seq[(String, Double)] = Nil): Unit = {
       val p = EDisMax.parse(q, mm)
-      def run(iv: graft.index.IndexView) =
-        EDisMax.topK(Seq(iv -> boost), p, 10,
-          pf = if (pf) Seq(iv -> 0.7) else Nil,
-          pf2 = if (pf2) Seq(iv -> 0.4) else Nil,
-          pf3 = if (pf3) Seq(iv -> 0.3) else Nil,
-          bq = bq).collect().toSeq
-      assert(run(textIdx) === run(general), s"shape: q='$q' mm='$mm'")
+      def opt(on: Boolean, iv: IndexView, b: Double) = if (on) Seq(iv -> b) else Nil
+      def run(iv: IndexView) =
+        ranks(EDisMax.topK(Seq(iv -> boost), p, 10, pf = opt(pf, iv, 0.7),
+          pf2 = opt(pf2, iv, 0.4), pf3 = opt(pf3, iv, 0.3), bq = bq))
+      def twin(iv: IndexView) =
+        generalPlan(Seq(iv -> boost), p, 10, pf = opt(pf, iv, 0.7),
+          pf2 = opt(pf2, iv, 0.4), pf3 = opt(pf3, iv, 0.3), bq = bq)
+      val got = run(textIdx)
+      assert(got === twin(textIdx), s"shape: q='$q' mm='$mm'")
+      assert(run(warmText) === got, s"warm: q='$q' mm='$mm'")
+      assert(run(plain(textIdx)) === got, s"cold: q='$q' mm='$mm'")
+      val tomb = run(tombText)
+      assert(tomb === twin(tombText), s"tombstoned: q='$q' mm='$mm'")
+      assert(!tomb.exists(r => tombDocIds(r._2)), s"tombstoned doc ranked: q='$q'")
     }
     both("sort merge window", "2<67%", pf2 = true)         // the x01 shape
     both("spark join", "0")                                 // plain OR
@@ -222,15 +296,8 @@ class EDisMaxSpec extends SparkSpec {
   test("kernel ≡ general plan on randomized caller-built Parsed (incl. must∩should overlap)") {
     // bypasses parse(): raw Parsed values with duplicate lists, terms in
     // BOTH must and should, and mm counts beyond the optional-clause
-    // count — topK's normalization must make both plans see the same
-    // invariant, or the kernel double-counts the overlapping term
-    val general: graft.index.IndexView = new graft.index.IndexView {
-      def spark = textIdx.spark
-      def stats = textIdx.stats
-      def postings = textIdx.postings
-      def docs = textIdx.docs
-      def termStats = textIdx.termStats
-    }
+    // count — topK's normalization must give the kernel the invariant
+    // the general plan states, or it double-counts the overlapping term
     val pool = Vector("spark", "merge", "data", "sort", "window", "zzzabsent")
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 12) {
@@ -243,40 +310,40 @@ class EDisMaxSpec extends SparkSpec {
       val mm = rnd.nextInt(should.length + 2)
       val p = EDisMax.Parsed(must, should, mustNot, mm, (must ++ should).distinct)
       val pf2 = if (rnd.nextBoolean()) Seq(textIdx -> 0.4) else Nil
-      val viaKernel = EDisMax.topK(Seq(textIdx -> 1.0), p, 10, pf2 = pf2)
-        .collect().toSeq
-      val viaGeneral = EDisMax.topK(Seq(general -> 1.0), p, 10,
-        pf2 = pf2.map { case (_, b) => (general, b) }).collect().toSeq
+      val viaKernel = ranks(EDisMax.topK(Seq(textIdx -> 1.0), p, 10, pf2 = pf2))
+      val viaGeneral = generalPlan(Seq(textIdx -> 1.0), p, 10, pf2 = pf2)
       assert(viaKernel === viaGeneral,
         s"trial $trial: must=$must should=$should mustNot=$mustNot mm=$mm")
     }
   }
 
   test("multi-field kernel ≡ general plan across query shapes") {
-    // force the general plan by wrapping ONE field as a plain
-    // IndexView (kernel eligibility requires every field warm)
-    def plain(i: graft.index.InvertedIndex): graft.index.IndexView =
-      new graft.index.IndexView {
-        def spark = i.spark
-        def stats = i.stats
-        def postings = i.postings
-        def docs = i.docs
-        def termStats = i.termStats
-      }
+    // qf = text^2 url^1; each shape also runs with the text field
+    // tombstoned (a doc deleted there can still match through the url
+    // field) and with both fields as cold plain views
     def both(q: String, mm: String, tie: Double = 0.0,
              pfText: Boolean = false, pf2Text: Boolean = false,
-             bq: Seq[(String, Double)] = Nil): Unit = {
+             bq: Seq[(String, Double)] = Nil, bf: Option[Column] = None): Unit = {
       val p = EDisMax.parse(q, mm)
-      def run(t: graft.index.IndexView, u: graft.index.IndexView) =
-        EDisMax.topK(Seq(t -> 2.0, u -> 1.0), p, 10, tie = tie,
-          pf = if (pfText) Seq(t -> 0.7) else Nil,
-          pf2 = if (pf2Text) Seq(t -> 0.4) else Nil,
-          bq = bq).collect().toSeq
-      assert(run(textIdx, urlIdx) === run(plain(textIdx), plain(urlIdx)),
-        s"shape: q='$q' mm='$mm' tie=$tie")
+      def opt(on: Boolean, iv: IndexView, b: Double) = if (on) Seq(iv -> b) else Nil
+      def run(t: IndexView, u: IndexView) =
+        ranks(EDisMax.topK(Seq(t -> 2.0, u -> 1.0), p, 10, tie = tie, bf = bf,
+          pf = opt(pfText, t, 0.7), pf2 = opt(pf2Text, t, 0.4), bq = bq))
+      def twin(t: IndexView, u: IndexView) =
+        generalPlan(Seq(t -> 2.0, u -> 1.0), p, 10, tie = tie, bf = bf,
+          pf = opt(pfText, t, 0.7), pf2 = opt(pf2Text, t, 0.4), bq = bq)
+      val got = run(textIdx, urlIdx)
+      assert(got === twin(textIdx, urlIdx), s"shape: q='$q' mm='$mm' tie=$tie")
+      assert(run(plain(textIdx), plain(urlIdx)) === got, s"cold: q='$q' mm='$mm' tie=$tie")
+      assert(run(tombText, urlIdx) === twin(tombText, urlIdx),
+        s"tombstoned text: q='$q' mm='$mm' tie=$tie")
     }
+    val lnDl = Some(log(col("dl") + lit(1L)))
     both("spark src3", "50%")                     // the ir_q30 gate shape
     both("spark src3", "50%", tie = 0.3)          // dismax tiebreak fold
+    both("spark src3", "50%", tie = 0.3, bf = lnDl) // the ir_q35 gate shape
+    both("spark src3 merge", "2", tie = 0.3,      // bf dominating the ranking
+      bf = Some(col("dl").cast("double") * 1e6))
     both("spark src3 merge", "2")                 // absolute mm across fields
     both("+spark src1", "0")                      // must in one field
     both("+spark -src1 merge", "0")               // mustNot from the url field

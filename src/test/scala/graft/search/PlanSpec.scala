@@ -79,10 +79,22 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Window"), p.take(3000))
   }
 
-  test("edismax bf feature scan: candidate ids pushed into the docs scan") {
-    val p = plan(EDisMax.bfFeatures(idx, log(col("dl") + lit(1L)),
-      Some(Seq(1L, 2L, 3L))))
-    assert(p.contains("In(docId"), p.take(3000))
+  test("edismax: one MapGroups pass, zero Window, a docs join only for bf") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, MapGroups, Window => WindowOp}
+    // qf = text^2 url^1 with a pf2 boost on text: both fields' position
+    // scans union into ONE groupByKey; norms ride on the postings, so
+    // only bf reads the docs table
+    val urlIdx = SparkEntry.urlIndex(spark, sfDir)
+    def shape(bf: Option[org.apache.spark.sql.Column]): (Int, Int, Int) = {
+      val lp = EDisMax.scoredDocs(Seq(idx -> 2.0, urlIdx -> 1.0),
+        EDisMax.parse("sort merge window", "2<67%"), 0.3, bf,
+        Nil, Seq(idx -> 0.4), Nil, Seq("spark" -> 1.5)).queryExecution.optimizedPlan
+      (lp.collect { case m: MapGroups => m }.size,
+        lp.collect { case w: WindowOp => w }.size,
+        lp.collect { case j: Join => j }.size)
+    }
+    assert(shape(None) === ((1, 0, 0)))
+    assert(shape(Some(log(col("dl") + lit(1L)))) === ((1, 0, 1)))
   }
 
   test("fl pipeline: driver-local hit ids prune the docs feature scan") {
